@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import lexicon as lx
+from ..schema import FUZZY_CANDIDATE_SCHEMA, literal_df
 
 # candidate dim: single-word terms len>=5 in reference priority order
 CANDIDATES: list[tuple[str, str, int]] = [
@@ -58,7 +59,7 @@ def norm_sql(col: str = "w") -> str:
 
 
 def candidates_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CANDIDATES, ["term", "category", "ord"])
+    return literal_df(spark, CANDIDATES, FUZZY_CANDIDATE_SCHEMA)
 
 
 def spark_fuzzy_vocab(docs: DataFrame, spark: SparkSession) -> DataFrame:

@@ -20,7 +20,8 @@ def bar_chart(data: dict[str, int], title: str, max_width: int = 50) -> str:
     lines = [title, "=" * len(title)]
     peak = max(data.values()) or 1
     label_w = max(len(k) for k in data)
-    for key, value in sorted(data.items(), key=lambda kv: -kv[1]):
+    # ties by label: aggregate rows come back in no fixed order
+    for key, value in sorted(data.items(), key=lambda kv: (-kv[1], kv[0])):
         bar = "#" * max(1, int(value / peak * max_width)) if value else ""
         lines.append(f"  {key.ljust(label_w)} | {bar} {value}")
     return "\n".join(lines)
@@ -29,24 +30,29 @@ def bar_chart(data: dict[str, int], title: str, max_width: int = 50) -> str:
 def processing_report(results: DataFrame) -> str:
     """Job-level report (reference visualize_processing_report :49-101):
     verification-status chart, keep/drop summary, PII category chart
-    (from the redactions column when the caller kept it)."""
-    # coalesce: sum/avg over zero rows is NULL — an empty results table
-    # should report 0s, not "Kept: None"
-    agg = results.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0)).alias("kept"),
-        F.coalesce(F.sum("pii_count"), F.lit(0)).alias("total_pii"),
-        F.coalesce(F.round(F.avg("pii_count"), 2), F.lit(0.0)).alias("avg_pii"),
-    ).collect()[0]
-    status = {r["qa_status"]: r["n"] for r in
-              results.groupBy("qa_status").agg(F.count(F.lit(1)).alias("n"))
-              .collect()}
+    (from the redactions column when the caller kept it).
+
+    Totals and per-status counts come from ONE rollup pass over the
+    results (one scan, one aggregation); `grouping()` tells the
+    grand-total row from a real NULL status."""
+    # coalesce: sum/avg over zero rows is NULL — report 0s, not "Kept: None"
+    rows = (results.rollup("qa_status")
+            .agg(F.count(F.lit(1)).alias("total"),
+                 F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0)).alias("kept"),
+                 F.coalesce(F.sum("pii_count"), F.lit(0)).alias("total_pii"),
+                 F.coalesce(F.round(F.avg("pii_count"), 2), F.lit(0.0)).alias("avg_pii"),
+                 F.grouping("qa_status").alias("is_total"))
+            .collect())
+    status = {r["qa_status"]: r["total"] for r in rows if not r["is_total"]}
+    # an empty table yields no rollup rows at all, grand total included
+    agg = next((r for r in rows if r["is_total"]),
+               {"total": 0, "kept": 0, "total_pii": 0, "avg_pii": 0.0})
     out = [
         "PII REDACTION PIPELINE — PROCESSING REPORT",
         "",
         f"Total clips:      {agg['total']}",
         f"Kept:             {agg['kept']} "
-        f"({(agg['kept'] or 0) / max(agg['total'], 1):.1%})",
+        f"({agg['kept'] / max(agg['total'], 1):.1%})",
         f"Total PII found:  {agg['total_pii']} (avg {agg['avg_pii']}/clip)",
         "",
         bar_chart(status, "VERIFICATION STATUS"),

@@ -7,6 +7,9 @@ transcript string).
 
 from __future__ import annotations
 
+import json
+
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CLIPS_SCHEMA = T.StructType([
@@ -78,3 +81,38 @@ LINEAGE_SCHEMA = T.StructType([
     T.StructField("elapsed_ms", T.LongType(), True),
     T.StructField("status", T.StringType(), True),
 ])
+
+# Long-format monitor rows next to the lineage table (tableio.append_metrics).
+METRICS_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType(), True),
+    T.StructField("source", T.StringType(), True),
+    T.StructField("metric", T.StringType(), True),
+    T.StructField("value", T.DoubleType(), True),
+    T.StructField("ts_ms", T.LongType(), True),
+])
+
+# Fuzzy candidate dim (fuzzy_sql.candidates_df), reference priority order.
+FUZZY_CANDIDATE_SCHEMA = T.StructType([
+    T.StructField("term", T.StringType(), True),
+    T.StructField("category", T.StringType(), True),
+    T.StructField("ord", T.LongType(), True),
+])
+
+
+def literal_df(spark, rows, schema: T.StructType):
+    """A driver-side list of tuples as a table built in the JVM: one JSON
+    string literal parsed by `from_json` into `array<schema>` and
+    `inline`d on a one-row, one-partition range. Catalyst folds the parse
+    into a constant, so the table costs one single-task stage and no
+    Python worker.
+
+    Why not `createDataFrame(list)`: it pickles the rows through
+    `sc.parallelize` — defaultParallelism Python tasks to list a few
+    metadata rows. Why not one `F.struct(F.lit(..))` per row: every
+    literal is a Py4J round trip (256 rows x 7 fields took 6.3 s, the
+    JSON literal 0.03 s; local[2] driver on a 4-core host). FAILFAST
+    turns a value that does not fit its declared type into an error
+    instead of a silently empty table."""
+    doc = json.dumps([dict(zip(schema.names, r)) for r in rows])
+    return spark.range(0, 1, 1, 1).select(F.inline(F.from_json(
+        F.lit(doc), T.ArrayType(schema), {"mode": "FAILFAST"})))

@@ -4,10 +4,11 @@ Scale rationale (targets a 1000-executor cluster; tested on local[N]):
   - AQE on: runtime partition coalescing + skew-split for the heavy-tailed
     transcript-length distribution (north rule requires explicit skew
     handling; AQE is the Catalyst half, salted repartition the job half).
-  - Arrow enabled + small maxRecordsPerBatch: clips rows can carry MB-scale
+  - Arrow enabled + sized maxRecordsPerBatch: clips rows can carry MB-scale
     audio ``bytes``; 10k-row default batches would OOM the Python workers
-    (SURVEY §4.3). 256 rows/batch keeps worker RSS bounded while amortizing
-    Arrow overhead.
+    (SURVEY §4.3). The session default is 1024 rows; apply_pipeline sets
+    16384 for text-only runs (UDF throughput) and 256 when audio flows
+    through the decode UDF (bounded worker RSS).
   - shuffle.partitions sized to cores for local mode; on a real cluster AQE
     coalesces from a higher initial number.
 """

@@ -15,6 +15,15 @@ Design (Iceberg-first, parquet fallback — SURVEY §7.3.4):
     bucket replaces its own files only.
   - After the results job commits, one lineage row per completed bucket is
     appended (run_id, bucket, n_rows, n_kept, n_errors, elapsed_ms, DONE).
+    The counts come from ONE grouped collect over the committed read-back
+    (at most n_buckets rows); the driver zero-fills pending buckets that
+    selected no rows and writes the rows as a JVM literal table
+    (schema.literal_df). Not `createDataFrame(list)`: that pickles the
+    bucket ids through sc.parallelize — defaultParallelism Python tasks,
+    thousands on a large cluster, to list a few hundred buckets.
+  - The run keeps the results schema it just wrote, so its read-backs
+    (lineage counts, results()) skip the footer-reading schema-inference
+    job a bare `spark.read.parquet` launches.
   - Resume = anti-join: buckets with a DONE lineage row are skipped; only
     unfinished buckets are read (partition pruning on the input side when
     the source is bucket-partitioned) and re-processed. A bucket that was
@@ -32,6 +41,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..schema import LINEAGE_SCHEMA, METRICS_SCHEMA, literal_df
 
 BUCKET_COL = "bucket"
 
@@ -74,16 +86,12 @@ def append_metrics(metrics: DataFrame, out_dir: str, source: str,
     keeps the metrics table schema stable as new monitors are added —
     production runbooks (SCALE.md: "monitor candidate volume and raise
     N_IVF_BITS / widen hash slices") read this table."""
-    import uuid as _uuid
-
-    run_id = run_id or _uuid.uuid4().hex[:12]
+    run_id = run_id or uuid.uuid4().hex[:12]
     ts_ms = int(time.time() * 1000)
     wide = metrics.collect()  # one row by contract — metadata-scale
     rows = [(run_id, source, c, float(r[c]), ts_ms)
             for r in wide for c in metrics.columns]
-    (metrics.sparkSession.createDataFrame(
-        rows, "run_id string, source string, metric string, "
-              "value double, ts_ms long")
+    (literal_df(metrics.sparkSession, rows, METRICS_SCHEMA)
      .write.mode("append").parquet(str(Path(out_dir) / "metrics")))
 
 
@@ -105,6 +113,7 @@ class ResumableRun:
         self.n_buckets = n_buckets
         self.results_path = str(self.out / "results")
         self.lineage_path = str(self.out / "lineage")
+        self._results_schema: T.StructType | None = None
 
     # -- lineage ------------------------------------------------------------
 
@@ -115,15 +124,6 @@ class ResumableRun:
                 .where(F.col("status") == "DONE")
                 .select(BUCKET_COL).distinct().collect())
         return {r[BUCKET_COL] for r in rows}
-
-    def _append_lineage(self, run_id: str, stats: DataFrame, elapsed_ms: int):
-        (stats
-         .withColumn("run_id", F.lit(run_id))
-         .withColumn("elapsed_ms", F.lit(elapsed_ms).cast("long"))
-         .withColumn("status", F.lit("DONE"))
-         .select("run_id", BUCKET_COL, "n_rows", "n_kept", "n_errors",
-                 "elapsed_ms", "status")
-         .write.mode("append").parquet(self.lineage_path))
 
     # -- execution ----------------------------------------------------------
 
@@ -147,32 +147,40 @@ class ResumableRun:
         results = process_fn(todo)
 
         write_partitioned(results, self.results_path, self.spark)
+        # the read-back schema: data columns in write order, then the
+        # partition column (Spark makes every field nullable on read)
+        self._results_schema = T.StructType(
+            [f for f in results.schema.fields if f.name != BUCKET_COL]
+            + [T.StructField(BUCKET_COL, T.IntegerType(), True)])
 
         elapsed_ms = int((time.time() - t0) * 1000)
         # metrics from the committed table (not the plan) → lineage reflects
-        # what is actually on disk
-        written = (self.spark.read.parquet(self.results_path)
-                   .where(F.col(BUCKET_COL).isin(pending)))
+        # what is actually on disk; one grouped collect, ≤ n_buckets rows
+        written = self.results().where(F.col(BUCKET_COL).isin(pending))
         agg = [F.count(F.lit(1)).alias("n_rows")]
         agg.append((F.sum(F.col("keep").cast("long")) if "keep" in results.columns
                     else F.lit(0)).alias("n_kept"))
         agg.append((F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
                     if "error" in results.columns else F.lit(0)).alias("n_errors"))
-        # left-join against the pending list so buckets that produced zero
-        # rows still get a DONE row (n_rows=0) — otherwise resume re-selects
-        # them forever and a drive-until-done loop never terminates
-        pending_df = self.spark.createDataFrame(
-            [(int(b),) for b in pending], f"{BUCKET_COL} int")
-        stats = (pending_df
-                 .join(written.groupBy(BUCKET_COL).agg(*agg),
-                       BUCKET_COL, "left")
-                 .fillna(0, subset=["n_rows", "n_kept", "n_errors"]))
-        self._append_lineage(run_id, stats, elapsed_ms)
+        counts = {r[0]: r[1:] for r in
+                  written.groupBy(BUCKET_COL).agg(*agg).collect()}
+        # every pending bucket gets a DONE row, zero-filled when it selected
+        # no rows — otherwise resume re-selects it forever and a
+        # drive-until-done loop never terminates (a NULL sum also reads 0)
+        rows = [(run_id, b, *(int(v or 0) for v in counts.get(b, (0, 0, 0))),
+                 elapsed_ms, "DONE") for b in pending]
+        (literal_df(self.spark, rows, LINEAGE_SCHEMA)
+         .write.mode("append").parquet(self.lineage_path))
         return {"run_id": run_id, "processed_buckets": len(pending),
                 "skipped_buckets": len(done), "elapsed_ms": elapsed_ms}
 
     def results(self) -> DataFrame:
-        return self.spark.read.parquet(self.results_path)
+        """The results table; read with the schema this object wrote when
+        it has one (no inference job), else inferred from the files."""
+        if self._results_schema is None:
+            return self.spark.read.parquet(self.results_path)
+        return self.spark.read.schema(self._results_schema).parquet(
+            self.results_path)
 
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(self.lineage_path)

@@ -88,6 +88,73 @@ def test_empty_buckets_marked_done(spark, tmp_path):
     assert rr.results().count() == 20
 
 
+LINEAGE_DDL = ("struct<run_id:string,bucket:int,n_rows:bigint,n_kept:bigint,"
+               "n_errors:bigint,elapsed_ms:bigint,status:string>")
+
+
+def _audio_process(df):
+    out = apply_pipeline(df, PipelineConfig(with_audio_verify=True,
+                                            with_ppl=False))
+    return out.drop("redactions")
+
+
+@pytest.mark.parametrize("audio", [False, True], ids=["text", "audio"])
+def test_lineage_schema_and_known_schema_results(spark, tmp_path, audio):
+    """Lineage has one schema whatever the pipeline (n_errors is bigint
+    with or without an `error` column), and the results a run reads back
+    with the schema it wrote equal a fresh inferred read of the same
+    directory: names, types, nullability and rows."""
+    clips = datagen.clips_df(spark, 60, seed=13, partitions=2,
+                             with_audio=audio)
+    rr = ResumableRun(spark, str(tmp_path / "o"), n_buckets=BUCKETS)
+    rr.run(clips, _audio_process if audio else process)
+    assert ("error" in rr.results().columns) == audio
+    assert rr.lineage().schema.simpleString() == LINEAGE_DDL
+
+    known = rr.results()
+    inferred = ResumableRun(spark, rr.out).results()
+    assert known.schema == inferred.schema
+    assert (sorted(known.collect(), key=lambda r: r["clip_id"])
+            == sorted(inferred.collect(), key=lambda r: r["clip_id"]))
+
+
+def test_bookkeeping_runs_no_python_tasks(spark, clips, tmp_path,
+                                          monkeypatch):
+    """Lineage rows, results read-back and the processing report are built
+    in the JVM: with createDataFrame and parallelize made to raise, a run
+    and its report still succeed."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    from pii_redaction_pipeline_spark.report import processing_report
+
+    src = str(tmp_path / "in")
+    clips.write.parquet(src)     # the input is built before the patch
+    staged = spark.read.parquet(src)
+
+    def refuse(*_a, **_k):
+        raise AssertionError("driver rows shipped through Python tasks")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    rr = ResumableRun(spark, str(tmp_path / "o"), n_buckets=64)
+    info = rr.run(staged, process)
+    assert info["processed_buckets"] == 64
+    assert rr.results().count() == N
+    assert sum(r["n_rows"] for r in rr.lineage().collect()) == N
+    assert f"Total clips:      {N}" in processing_report(rr.results())
+
+
+def test_empty_input_run_completes(spark, clips, tmp_path):
+    """An input that selects no rows commits no result files; the run
+    still records every bucket DONE and its results read back empty."""
+    rr = ResumableRun(spark, str(tmp_path / "o"), n_buckets=BUCKETS)
+    info = rr.run(clips.where("false"), process)
+    assert info["processed_buckets"] == BUCKETS
+    assert len(rr.done_buckets()) == BUCKETS
+    assert rr.results().count() == 0
+
+
 def test_half_written_bucket_overwritten(spark, clips, tmp_path):
     """A bucket written but not recorded DONE (simulated crash between
     results commit and lineage append) is reprocessed without dupes."""
